@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Perf harness (driver contract): runs the query corpus on
   * SPARK_GRAFT_SF_DIR at local[32] and prints ONE JSON line.
   *
@@ -31,7 +29,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.core.SessionSetup.cores(32)
     // deployment-bracket arms (r18 verdict #4/#5): SPARK_GRAFT_MASTER /
     // SPARK_GRAFT_OFFHEAP / SPARK_GRAFT_LOCAL_DIRS via the shared
     // SessionSetup. Any of them set ⇒ this run is a CONFIG ARM: the
@@ -69,25 +67,12 @@ object Bench {
         (256.0 / sec, freeGb)
       } catch { case _: Throwable => (-1.0, -1.0) }
     }
-    val spark = graft.core.SessionSetup(
-      SparkSession.builder()
-        .master(master)
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.maxResultSize", "4g"),
-      master).getOrCreate()
-    // ERROR, not WARN: the one-line JSON below shares stdout with log4j,
-    // and WindowExec emits a WARN per bounded P-row/50-row window (harmless
-    // at scale but it breaks the driver's stdout parse — BENCH r1-r3 all
-    // came back "parsed": null because of this spam)
-    spark.sparkContext.setLogLevel("ERROR")
-    // deny the known-benign post-success accumulator spam; count every
-    // OTHER error-level event into the JSON so the artifact tail stays
-    // pure signal (see LogHygiene)
-    graft.core.LogHygiene.install()
+    // log level ERROR, not WARN: the one-line JSON below shares stdout
+    // with log4j, and WindowExec emits a WARN per bounded P-row/50-row
+    // window that breaks the driver's stdout parse. LogHygiene denies
+    // the known-benign post-success accumulator spam and counts every
+    // OTHER error-level event into the JSON.
+    val spark = graft.core.SessionSetup.session(32)
 
     def force(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: run ONE named [[SparkEntry.queries]] entry against a
   * testdata dir and print the result (and optionally the formatted
@@ -11,14 +10,7 @@ object RunOne {
     val sfDir = args(0)
     val name = args(1)
     val showPlan = args.contains("--plan")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.SessionSetup.session(8, "WARN")
     val t0 = System.nanoTime()
     val df = SparkEntry.queries(name)(spark, sfDir)
     if (showPlan)

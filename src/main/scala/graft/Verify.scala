@@ -72,23 +72,11 @@ object Verify {
     require(unknown.isEmpty,
       s"Verify: unknown gate name(s): ${unknown.toSeq.sorted.mkString(", ")} — " +
         s"known gates are SparkEntry.queries' keys")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER (r18 verdict #1): the multi-JVM seam gate —
-    // `local-cluster[n,cores,MB]` runs the full corpus against REAL
-    // separate executor JVMs, where executor-side init, broadcasts and
-    // plan literals can no longer ride on driver-JVM state the way they
-    // silently do under single-JVM local[k]
-    val master = graft.core.SessionSetup.master(s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = graft.core.SessionSetup(builder, master).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same hygiene as Bench: the benign accumulator spam would bury a
-    // real failure in 100+ identical stack traces
-    graft.core.LogHygiene.install()
+    // SPARK_GRAFT_MASTER=local-cluster[n,cores,MB] runs the full corpus
+    // against REAL separate executor JVMs, where executor-side init,
+    // broadcasts and plan literals can no longer ride on driver-JVM
+    // state the way they silently do under single-JVM local[k]
+    val spark = graft.core.SessionSetup.session(4, "WARN")
     val qs = if (only.isEmpty) SparkEntry.queries
              else SparkEntry.queries.view.filterKeys(only).toMap
     runAll(spark, sfDir, outDir, qs, SparkEntry.oracleSql)

@@ -6,9 +6,9 @@ import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
 import org.apache.logging.log4j.core.filter.AbstractFilter
 
-/** Log hygiene for the machine-readable entry points (Bench, Verify):
-  * their stdout tail is a parsed artifact, and a familiar-looking stack
-  * trace in it can hide a real failure.
+/** Log hygiene, installed by [[SessionSetup.session]] for every main:
+  * the stdout tail of Bench and Verify is a parsed artifact, and a
+  * familiar-looking stack trace in it can hide a real failure.
   *
   * Two moves, installed on the log4j2 root logger:
   *

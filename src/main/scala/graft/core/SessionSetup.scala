@@ -2,11 +2,17 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared session-config arms for the harness mains (Verify / Bench /
-  * ScaleDecade), so the multi-JVM and deployment knobs behave
-  * identically everywhere they are exposed (r18 verdict #1/#4/#5).
+/** The one session every main in this project runs under, so a number
+  * taken by any tool, example or harness is taken under the session
+  * `graft.Bench` measures under, and every deployment knob behaves the
+  * same wherever it is exposed.
+  *
+  * [[session]] builds `local[cores]` with shuffle partitions = cores,
+  * UTC, AQE with partition coalescing, no UI and a 4g result cap, then
+  * applies the env arms below.
   *
   * Knobs (all env-driven, all optional):
+  *  - SPARK_GRAFT_CPUS: core count (each main passes its own default).
   *  - SPARK_GRAFT_MASTER: master override. `local-cluster[n,cores,MB]`
   *    runs n SEPARATE executor JVMs — the config that exposes
   *    executor-side init / broadcast / plan-literal assumptions a
@@ -22,11 +28,37 @@ import org.apache.spark.sql.SparkSession
   *    (`spark.local.dir`), e.g. a tmpfs mount — the measured −83/−91%
   *    stime lever on the mm/stream gates (SCALING.md §single-node).
   *
-  * Bench treats any of these being set as a CONFIG ARM: the artifact
-  * is stamped and hard-routed away from the committed record, exactly
-  * like inject (floors are captured under the default config only).
+  * Bench treats a master, off-heap or local-dirs override as a CONFIG
+  * ARM: the artifact is stamped and hard-routed away from the
+  * committed record, exactly like inject (floors are captured under
+  * the default config only).
   */
 object SessionSetup {
+
+  /** SPARK_GRAFT_CPUS, else the caller's default. */
+  def cores(default: Int): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(default)
+
+  /** The session for a main whose default core count is `defaultCores`.
+    * `logLevel` replaces the quiet startup level (ERROR) once the
+    * context is up; [[LogHygiene]] is installed either way. */
+  def session(defaultCores: Int, logLevel: String = "ERROR"): SparkSession = {
+    val n = cores(defaultCores)
+    val m = master(s"local[$n]")
+    val spark = apply(
+      SparkSession.builder()
+        .master(m)
+        .config("spark.sql.shuffle.partitions", n.toString)
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.ui.enabled", "false")
+        .config("spark.driver.maxResultSize", "4g"),
+      m).getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    LogHygiene.install()
+    spark
+  }
 
   def master(default: String): String =
     sys.env.getOrElse("SPARK_GRAFT_MASTER", default)

@@ -51,12 +51,7 @@ object AmqpKafkaBridgeExample {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.SessionSetup.session(4, "WARN")
     val (relayed, preview) = run(spark)
     preview.foreach(println)
     println(s"relayed=$relayed")

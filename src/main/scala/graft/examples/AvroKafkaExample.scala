@@ -2,7 +2,6 @@ package graft.examples
 
 import graft.coders.AvroSerde
 import graft.core._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Port of the reference's Avro/Schema-Registry pipelines
@@ -27,12 +26,7 @@ object AvroKafkaExample {
       |{"name":"timestamp","type":"long","default":-1}]}""".stripMargin
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.SessionSetup.session(4, "WARN")
     import spark.implicits._
 
     val sr1 = new AvroSerde.InMemoryRegistry

@@ -2,7 +2,6 @@ package graft.examples
 
 import graft.core.Tables
 import graft.operators.Curation
-import org.apache.spark.sql.SparkSession
 
 /** Runnable end-to-end training-data curation over the documents table:
   * quality/language/repetition gates → exact dedup → MinHash near-dup
@@ -16,12 +15,7 @@ import org.apache.spark.sql.SparkSession
 object CurationPipelineExample {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.SessionSetup.session(8, "WARN")
 
     val docs = Tables(spark, dir).documents
     val f = Curation.funnel(docs)

@@ -136,7 +136,7 @@ object DailyCrawlExample {
     val spark = batch.sparkSession
     // resolve the live generation ONCE: both artifacts come from the
     // same consistent snapshot even if a recompaction promotes mid-call
-    val root = IndexGen.live(spark, indexDir).getOrElse(indexDir)
+    val root = IndexGen.liveRequired(spark, indexDir)
     if (!pathExists(spark, s"$root/lm") || !pathExists(spark, s"$root/cuts"))
       throw new IllegalStateException(
         s"$indexDir has no LM artifacts — re-run compactCorpus on a corpus with '$pplBy'")
@@ -173,7 +173,7 @@ object DailyCrawlExample {
     * (line dedup then simply skips). */
   def loadLineIndex(spark: SparkSession, indexDir: String)
       : Option[(DataFrame, Option[Array[Byte]])] = {
-    val root = IndexGen.live(spark, indexDir).getOrElse(indexDir)
+    val root = IndexGen.liveRequired(spark, indexDir)
     if (pathExists(spark, s"$root/lh")) {
       val bloom = if (pathExists(spark, s"$root/lh_bloom.bin"))
         Some(readBytes(spark, s"$root/lh_bloom.bin")) else None
@@ -188,7 +188,7 @@ object DailyCrawlExample {
     * then derive from the shingle long form at run time). */
   def loadIndex(spark: SparkSession, indexDir: String)
       : (DataFrame, Option[Array[Byte]], LshIndex) = {
-    val root = IndexGen.live(spark, indexDir).getOrElse(indexDir)
+    val root = IndexGen.liveRequired(spark, indexDir)
     val bloom = if (pathExists(spark, s"$root/bloom.bin"))
       Some(readBytes(spark, s"$root/bloom.bin")) else None
     val sizes = if (pathExists(spark, s"$root/sizes"))
@@ -408,11 +408,7 @@ object DailyCrawlExample {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.SessionSetup.session(32)
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val bucket = Sampling.hashBucket(col("doc_id"))

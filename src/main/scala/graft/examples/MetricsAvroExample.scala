@@ -91,12 +91,7 @@ object MetricsAvroExample {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.SessionSetup.session(4, "WARN")
     val out = run(spark)
     out.take(5).foreach(println) // ≙ std.Out TriggerEach(1) preview
     println(s"decoded=${out.size}")

@@ -2,7 +2,7 @@ package graft.examples
 
 import graft.core.Tables
 import graft.operators.{AudioModal, Curation, MultiModal, Similarity}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** CROSS-MODALITY curation — the finished north-star pieces composed
@@ -182,12 +182,7 @@ object MultiModalCurationExample {
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.SessionSetup.session(8, "WARN")
 
     val docs = Tables(spark, dir).documents
     val ids = docs.select("doc_id")

@@ -1,7 +1,7 @@
 package graft.examples
 
 import graft.operators.{Curation, Dedup, Similarity}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Second-scale-decade evidence for the five heaviest shuffle operators
@@ -45,26 +45,11 @@ object ScaleDecade {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).flatMap(_.toIntOption).getOrElse(10)
-    // SPARK_GRAFT_MASTER (default local[32]): the executor-count
-    // attribution knob (r16 verdict #7 stretch) — e.g.
-    // `local-cluster[4,8,20480]` runs 4 SEPARATE executor JVMs × 8
-    // cores × 20 GiB, so the single-process GC ceiling splits four
-    // ways while total cores stay 32. Executor processes need the
-    // graft classes on their classpath (sbt runs from target/classes,
-    // no jar is shipped), hence the extraClassPath passthrough.
-    val master = graft.core.SessionSetup.master("local[32]")
-    val builder = SparkSession.builder().master(master)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    // local-cluster extras + the off-heap arm (r17 verdict #5: moves
-    // Tungsten buffers out of the GC domain WITHOUT the loopback
-    // serialization the local-cluster arm pays — the fourth arm in
-    // SCALING.md) + the local-dirs lever now live in the shared
-    // SessionSetup so Verify/Bench/ScaleDecade expose identical knobs
-    val spark = graft.core.SessionSetup(builder, master).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // SPARK_GRAFT_MASTER (default local[32]) is the executor-count
+    // attribution knob — e.g. `local-cluster[4,8,20480]` runs 4
+    // SEPARATE executor JVMs × 8 cores × 20 GiB, so the single-process
+    // GC ceiling splits four ways while total cores stay 32
+    val spark = graft.core.SessionSetup.session(32)
 
     val sRead = new java.util.concurrent.atomic.AtomicLong()
     val sWrite = new java.util.concurrent.atomic.AtomicLong()

@@ -1,17 +1,11 @@
 package graft.examples
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 /** Throwaway 10x scale soak: duplicate the sf0.1 documents corpus 10x
   * (ids offset per copy) and time the dedup family — checks the join
   * shapes scale ~linearly, not quadratically. */
 object ScaleSoak {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.maxResultSize", "4g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.SessionSetup.session(32)
     val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     val n = base.count()
     // 10 copies with distinct ids AND perturbed text (append a copy tag

@@ -46,12 +46,7 @@ object ScatterGatherExample {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.SessionSetup.session(4, "WARN")
     val out = run(spark)
     out.foreach(println) // ≙ std.Out TriggerEach(1)
     println(s"gathered=${out.size}")

@@ -1,7 +1,6 @@
 package graft.examples
 
 import graft.streaming.Streams
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -15,13 +14,7 @@ import org.apache.spark.sql.streaming.OutputMode
   */
 object StreamingWindowExample {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.SessionSetup.session(4, "WARN")
 
     val stream = spark.readStream.format("graft.sources.RecordsDataSource")
       .option("rows", "600").option("rowsperbatch", "200").load()

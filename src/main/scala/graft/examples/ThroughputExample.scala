@@ -1,7 +1,6 @@
 package graft.examples
 
 import graft.core._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -13,12 +12,7 @@ import org.apache.spark.sql.types._
   */
 object ThroughputExample {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.SessionSetup.session(8, "WARN")
 
     val n = 10000000L
     val sink = new MemorySink

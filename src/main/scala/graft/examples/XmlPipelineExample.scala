@@ -1,7 +1,6 @@
 package graft.examples
 
 import graft.core._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,12 +13,7 @@ import org.apache.spark.sql.types._
   */
 object XmlPipelineExample {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.SessionSetup.session(4, "WARN")
 
     val names = Seq("Adam", "Albert", "Alice", "Alex", "Bart", "Bob",
       "Brittney", "Brenda", "Cecilia", "Chad", "Elliot", "Wojtek")

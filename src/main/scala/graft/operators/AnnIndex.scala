@@ -464,13 +464,10 @@ object AnnIndex {
     * CONCURRENCY: an already-loaded Model keeps answering from its own
     * generation during AND after the vacuum (the old generation
     * survives one promote — IndexGen keeps the predecessor); re-[[load]]
-    * to see the folded index. A LEGACY flat-layout index is migrated
-    * to the generational layout by its first vacuum (old top-level
-    * payload dirs are removed after the promote). */
+    * to see the folded index. */
   def vacuum(spark: SparkSession, indexDir: String): Unit = {
     val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(hadoopConf)
+    val fs = new org.apache.hadoop.fs.Path(indexDir).getFileSystem(hadoopConf)
     val liveGen = IndexGen.liveRequired(spark, indexDir)
     val tombPath = new org.apache.hadoop.fs.Path(s"$liveGen/tombstones")
     val addPath = new org.apache.hadoop.fs.Path(s"$liveGen/additions")
@@ -609,14 +606,6 @@ object AnnIndex {
     carrySweep() // bulk, into the still-staging gen: race-free by ordering
     IndexGen.promote(spark, indexDir, gen)
     carrySweep() // stragglers from the pre-carry→promote gap
-    // legacy flat layout: this vacuum migrated it into gen-00001 —
-    // retire the superseded top-level payload (readers resolve the
-    // manifest from here on; IndexGen's GC never touches non-gen dirs)
-    if (new org.apache.hadoop.fs.Path(liveGen).toUri.getPath == root.toUri.getPath)
-      Seq("corpus", "centroids", "codebooks", "tombstones", "corpus.old",
-          "corpus.compacting", "additions", FoldedMarks).foreach { d =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, d), true)
-      }
   }
 
   def load(spark: SparkSession, indexDir: String): Model = {

@@ -174,11 +174,8 @@ object BloomDedup {
     indexFromKeyedShingles(
       Dedup.shingleSet(docs, textCol, idCol, n), perms, bands, materialize)
 
-  /** The index stages DOWNSTREAM of shingling — shared by [[lshIndex]]
-    * (fresh build from text) and [[migrateLshIndex]] (one-pass upgrade
-    * of a pre-r17 persisted shingle table): both feed the SAME keyed
-    * (id, sh: LongType) shingle form, so migrated and fresh indexes are
-    * identical by construction. */
+  /** The index stages downstream of shingling, over the keyed
+    * (id, sh: LongType) shingle form. */
   private def indexFromKeyedShingles(keyed: DataFrame, perms: Int,
                                      bands: Int,
                                      materialize: Boolean): LshIndex = {
@@ -200,38 +197,6 @@ object BloomDedup {
     // sizes derive from the same checkpointed blocks — sharing them here
     // costs nothing in-memory and lets compaction persist the table
     LshIndex(s, banded, Some(s.groupBy("id").agg(count(lit(1)).as("n"))))
-  }
-
-  /** One-pass upgrade of a PRE-r17 persisted LSH shingle table (r17
-    * verdict #1): pre-r17 indexes persisted (id, sh) with `sh` the RAW
-    * n-gram string; since r17 `sh` is the 60-bit
-    * [[graft.functions.Text.shingleKey]]. The key is a pure function of
-    * the persisted string, so the standing index upgrades WITHOUT
-    * re-shingling (or even reading) the corpus text: one metadata-sized
-    * column transform over the shingle table, then the band signatures
-    * and set sizes re-derive through the index build's existing stages
-    * ([[Dedup.signaturesFrom]] hashes the key's decimal string — band
-    * sigs of the old scheme are mutually meaningless md5s and must NOT
-    * be carried over). At the 100 TB design point this is minutes over
-    * the shingle table vs days of corpus re-ingest.
-    *
-    * `oldShingles` = the persisted pre-r17 `shingles` table (id,
-    * sh: StringType). Returns a current-scheme [[LshIndex]] — persist
-    * its three tables over the old generation. Identical to a fresh
-    * [[lshIndex]] build by construction (the per-doc shingle STRING
-    * sets are equal, and every downstream stage is shared code — spec-
-    * pinned in MigrationSpec). */
-  def migrateLshIndex(oldShingles: DataFrame, perms: Int = 16,
-                      bands: Int = 4,
-                      materialize: Boolean = true): LshIndex = {
-    val t = oldShingles.schema("sh").dataType
-    require(t == org.apache.spark.sql.types.StringType,
-      s"migrateLshIndex expects a pre-r17 shingle table (sh: StringType " +
-        s"raw n-grams); got sh: $t — a LongType table is already keyed " +
-        "(current scheme), nothing to migrate.")
-    indexFromKeyedShingles(
-      oldShingles.select(col("id"), Text.shingleKey(col("sh")).as("sh")),
-      perms, bands, materialize)
   }
 
   def incrementalLsh(batch: DataFrame, corpus: DataFrame, threshold: Double,
@@ -262,10 +227,8 @@ object BloomDedup {
       require(t == org.apache.spark.sql.types.LongType,
         s"$side LSH index carries $t shingles — a pre-r17 persisted index " +
           "(raw n-gram strings). Keyed (LongType) and string shingle sets " +
-          "never match in the verify join (silent zero-recall); upgrade it " +
-          "IN ONE PASS with migrateLshIndex(oldShingles) — a column " +
-          "transform over the persisted shingle table, no corpus " +
-          "re-shingling — or rebuild from text with lshIndex().")
+          "never match in the verify join (silent zero-recall); rebuild " +
+          "from text with lshIndex().")
     }
     val cand = bband.as("a").join(cband.as("b"),
         col("a.band") === col("b.band") && col("a.sig") === col("b.sig"))
@@ -354,35 +317,13 @@ object BloomDedup {
     * [[lshIndex]], [[corpusLineHashes]], [[graft.operators.AnnIndex]]):
     * the DISTINCT 60-bit token k-gram keys of the standing corpus
     * ([[graft.functions.Text.shingleKey]] over each k-token window —
-    * LongType since r17; pre-r17 tables carried 32-char md5 strings).
+    * LongType; pre-r17 tables carried 32-char md5 strings and are
+    * refused by [[incrementalSpans]]).
     * Write it partitioned/bucketed by `h` once per corpus compaction;
     * ~8 B per distinct gram. */
   def corpusGrams(corpus: DataFrame, k: Int = 5, textCol: String = "text",
                   idCol: String = "doc_id"): DataFrame =
     Dedup.tokenGrams(corpus, k, textCol, idCol).select("h").distinct()
-
-  /** One-pass upgrade of a PRE-r17 persisted gram table (r17 verdict
-    * #1): pre-r17 [[corpusGrams]] stored `h` as the FULL 32-char
-    * md5(gram) hex string; the current 60-bit key is BY DEFINITION its
-    * first 15 hex chars as a bigint ([[graft.functions.Text.shingleKey]]
-    * applied to the gram — `conv(substring(h,1,15),16,10)`), so the
-    * standing table upgrades without re-tokenizing a single corpus
-    * document: one metadata-sized column transform (~minutes over the
-    * distinct-gram table at 100 TB corpus scale vs a full re-ingest).
-    * The trailing `.distinct()` collapses the rare 15-hex-prefix
-    * collisions so the result is set-identical to a fresh
-    * [[corpusGrams]] build (spec-pinned in MigrationSpec). Persist the
-    * result over the old generation (partitioned/bucketed by `h`,
-    * ~8 B/gram — a quarter of the old layout). */
-  def migrateGramTable(old: DataFrame): DataFrame = {
-    val t = old.schema("h").dataType
-    require(t == org.apache.spark.sql.types.StringType,
-      s"migrateGramTable expects a pre-r17 gram table (h: StringType " +
-        s"full md5 hex); got h: $t — a LongType table is already keyed " +
-        "(current scheme), nothing to migrate.")
-    old.select(conv(substring(col("h"), 1, 15), 16, 10).cast("long").as("h"))
-      .distinct()
-  }
 
   /** Incremental ExactSubstr (Lee et al. 2021) — token spans of BATCH
     * docs duplicating content that exists anywhere else: in the
@@ -412,9 +353,7 @@ object BloomDedup {
     require(ht == org.apache.spark.sql.types.LongType,
       s"corpus gram table carries $ht hashes — a pre-r17 persisted table " +
         "(md5 strings). Keyed (LongType) and string grams never match in " +
-        "the semi-join (silent all-novel result); upgrade it IN ONE PASS " +
-        "with migrateGramTable(old) — the key is a prefix of the stored " +
-        "md5, no corpus re-ingest — or rebuild from text with " +
+        "the semi-join (silent all-novel result); rebuild from text with " +
         "corpusGrams().")
     GraftFunctions.register(batch.sparkSession)
     val grams = Dedup.shared(

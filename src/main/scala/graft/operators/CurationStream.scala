@@ -85,9 +85,7 @@ object CurationStream {
   val SigVersion = 2
   private val SigVersionFile = "_sig_version"
 
-  /** Marker I/O, one copy (shared by [[checkSigVersion]] and
-    * [[migrateSigState]] — the IndexGen readSmall/writeSmall idea):
-    * None = no marker on disk. */
+  /** The marker on disk, None when there is none. */
   private def readMarker(fs: org.apache.hadoop.fs.FileSystem,
                          marker: org.apache.hadoop.fs.Path): Option[Int] =
     if (!fs.exists(marker)) None
@@ -115,11 +113,9 @@ object CurationStream {
         require(v == SigVersion,
           s"dedup state at $stateDir carries signature scheme v$v; this build " +
             s"writes v$SigVersion — band signatures across schemes never match " +
-            "(silent near-dup recall loss). Run migrateSigState(spark, " +
-            "stateDir) — it recomputes the band signatures from the STAGED " +
-            "gated text already in the state (no raw re-ingest, no media " +
-            "re-decode, no re-gating) — or pin the library version that " +
-            "wrote it.")
+            "(silent near-dup recall loss). Rebuild the state from text " +
+            "(re-ingest into a fresh state dir) or pin the library version " +
+            "that wrote it.")
       case None =>
         // no marker: EITHER a fresh dir (stamp it) or state written
         // before the marker existed (= scheme 1: refuse — proceeding
@@ -130,9 +126,7 @@ object CurationStream {
         require(!hasState,
           s"dedup state at $stateDir predates the signature-scheme marker " +
             s"(scheme 1, raw-shingle signatures); this build writes v$SigVersion " +
-            "— run migrateSigState(spark, stateDir): it recomputes the band " +
-            "signatures from the STAGED gated text already in the state (no " +
-            "raw re-ingest).")
+            "— rebuild the state from text (re-ingest into a fresh state dir).")
         stampMarker(fs, marker)
     }
   }
@@ -146,43 +140,51 @@ object CurationStream {
     "img_sigs" -> Seq("band", "bv"), "img_losers" -> Seq("doc_id"),
     "aud_sigs" -> Seq("band", "bv"), "aud_losers" -> Seq("doc_id"))
 
-  /** Run independent state-lane thunks CONCURRENTLY from the driver
-    * (r20, guide §2.6 — overlap independent jobs): at micro-batch
-    * granularity the per-epoch wall is dominated by JOB COUNT — each
-    * tiny AQE stage pays serial driver/scheduler/commit latency, not
-    * task time (ProfCurStream r19: finalize ran 39 jobs for 2.7
-    * task-SECONDS) — so running the text/img/aud lanes (and the fold's
-    * per-table writes) through a small pool lets one lane's scheduling
-    * gaps be back-filled by another's tasks. FIFO scheduling keeps the
-    * back-fill behavior; results are unchanged because the thunks
-    * touch disjoint state tables. Failures propagate unwrapped so
-    * foreachBatch's replay contract sees the original exception. */
-  private def inParallel(work: Seq[(String, () => Unit)])
-                        (implicit spark: SparkSession): Unit =
+  /** Run independent state-lane thunks CONCURRENTLY from the driver:
+    * at micro-batch granularity the per-epoch wall is dominated by JOB
+    * COUNT — each tiny AQE stage pays serial driver/scheduler/commit
+    * latency, not task time — so running the text/img/aud lanes (and
+    * the fold's per-table writes) side by side lets one lane's
+    * scheduling gaps be back-filled by another's tasks. Results are
+    * unchanged because the thunks touch disjoint state tables.
+    *
+    * Every lane finishes before a failure surfaces: a lane still
+    * writing its `__epoch=N` partitions must not race the foreachBatch
+    * replay of the same epoch. The first failing lane's exception (in
+    * `work` order) is rethrown unwrapped, so the replay contract sees
+    * the original exception. */
+  private[graft] def inParallel(work: Seq[(String, () => Unit)])
+                               (implicit spark: SparkSession): Unit =
     if (work.size <= 1) work.foreach(_._2())
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(work.size)
-      try {
-        val futs = work.map { case (label, w) =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit = {
-              // per-lane job label (thread-local — exactly why the
-              // guide §1.5 labels matter here: the UI/listeners can
-              // attribute each concurrent lane's jobs)
-              spark.sparkContext.setJobDescription(s"graft-cs:$label")
-              try w() finally spark.sparkContext.setJobDescription(null)
-            }
-          })
+      val futs = work.map { case (label, w) =>
+        // the caller's local properties (stream job group, session)
+        // are installed on the pooled thread per call, not inherited
+        // once when the thread was created
+        org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+            spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], lanePool) {
+          // per-lane job label: listeners can attribute each lane's jobs
+          spark.sparkContext.setJobDescription(s"graft-cs:$label")
+          w()
         }
-        futs.foreach { f =>
-          try f.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw Option(e.getCause).getOrElse(e)
-          }
+      }
+      val failures = futs.flatMap { f =>
+        try { f.get(); None }
+        catch {
+          case e: java.util.concurrent.ExecutionException =>
+            Some(Option(e.getCause).getOrElse(e))
         }
-      } finally pool.shutdown()
+      }
+      failures.headOption.foreach(e => throw e)
     }
+
+  /** One pool for every [[inParallel]] call: threads are made on demand,
+    * retire after 60 s idle, and never hold the JVM open. */
+  private lazy val lanePool = java.util.concurrent.Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "graft-cs-lane")
+    t.setDaemon(true)
+    t
+  }
 
   private def writeEpoch(df: DataFrame, dir: String, epochId: Long): Unit =
     // coalesce: state tables are batch-sized (gated docs, dup-rate
@@ -197,10 +199,10 @@ object CurationStream {
       .partitionBy(Epoch)
       .parquet(dir)
 
-  /** Schema memo for state-table reads (r19, guide §1.2 per-task →
-    * per-JOB overhead): every schema-less `spark.read.parquet` runs a
-    * footer-inference JOB (~0.2–0.4 s of serial driver+scheduler time
-    * on an idle host, worse on a churned scratch FS), and one ingest
+  /** Schema memo for state-table reads: every schema-less
+    * `spark.read.parquet` runs a footer-inference JOB (~0.2–0.4 s of
+    * serial driver+scheduler time on an idle host, worse on a churned
+    * scratch FS), and one ingest
     * epoch reads 4+ state tables, a fold 7, the consolidation 7–14 —
     * measured 20+ pure-inference jobs per gate run. The schema of a
     * state-table DIRECTORY never changes after its first write, so the
@@ -296,9 +298,9 @@ object CurationStream {
     accBefore(spark, stateDir, table, Long.MaxValue)
 
   /** Fold every state epoch STRICTLY BELOW `uptoEpoch` into ONE
-    * compacted [[IndexGen]] generation (r14 verdict #3 — the state
-    * layout bound): without this, `__epoch=`-partitioned state grows
-    * one partition-set per epoch forever, and at a year of hourly
+    * compacted [[IndexGen]] generation (the state layout bound):
+    * without this, `__epoch=`-partitioned state grows one
+    * partition-set per epoch forever, and at a year of hourly
     * micro-batches the per-epoch [[accBefore]] reads pay ~9k-partition
     * listings per table. After a fold, the accumulated side of every
     * per-epoch join is a BOUNDED number of files, each table CLUSTERED
@@ -353,14 +355,14 @@ object CurationStream {
           s"epochs below the new watermark will be no-ops; only correct " +
           s"if those epochs were genuinely empty")
     val gen = IndexGen.begin(spark, root)
-    // per-table fold writes run CONCURRENTLY (r20, guide §2.6 — same
-    // rationale as ingestEpoch's lanes): the 7 repartition+sort+write
-    // jobs read disjoint source trees and write disjoint staging dirs,
-    // and a fold's wall at micro-batch scale is job latency, not data
+    // per-table fold writes run CONCURRENTLY (same rationale as
+    // ingestEpoch's lanes): the 7 repartition+sort+write jobs read
+    // disjoint source trees and write disjoint staging dirs, and a
+    // fold's wall at micro-batch scale is job latency, not data
     inParallel(StateTables.map { case (t, keys) => s"fold:$t" -> (() => {
-      // presence IS non-emptiness (r19 — this replaces a per-table
-      // isEmpty ACTION per fold): a live `__epoch=N` partition dir only
-      // exists when epoch N committed ≥ 1 row (a zero-row dynamic
+      // presence IS non-emptiness (no per-table isEmpty ACTION per
+      // fold): a live `__epoch=N` partition dir only exists when
+      // epoch N committed ≥ 1 row (a zero-row dynamic
       // overwrite writes no partition dir — the invariant writeEpoch's
       // own docs rely on), and a compacted table is only written when
       // non-empty (the guard below maintains it). So "any in-range
@@ -417,125 +419,6 @@ object CurationStream {
     }
   }
 
-  /** One-pass signature-scheme migration of a standing state dir (r17
-    * verdict #1 — the cheapest valid remedy the version guard names):
-    * the `bands` table is the ONLY state whose rows are a function of
-    * the shingle scheme, and it is a pure PER-DOC function of the
-    * staged gated text — which the state already carries in full (the
-    * `gated` table retains text because [[finalizeCorpus]] emits it).
-    * So a scheme upgrade recomputes band signatures from STAGED text:
-    * no raw re-ingest of the source corpus, no media re-decode, no
-    * re-gating — at the 100 TB design point, a signature pass over the
-    * survivors vs days of full pipeline replay.
-    *
-    * What is (correctly) left untouched: `gated` (scheme-independent),
-    * `edges` (jaccard-VERIFIED pairs — true near-dups under any
-    * scheme; both schemes are equal-recall approximations, so edges
-    * found under the old scheme stay valid facts), `img_*`/`aud_*`
-    * (pixel/audio-derived, no text shingles anywhere).
-    *
-    * Covers both state generations: live `__epoch=` partitions are
-    * rebuilt in place via dynamic partition overwrite (each banded row
-    * keeps its doc's epoch, so [[ingestEpoch]]'s time-invariant
-    * [[accBefore]] reads are unchanged); a compacted generation is
-    * rebuilt through the existing [[IndexGen]] fold machinery — a NEW
-    * generation with `bands` recomputed and every other table carried
-    * over re-clustered, promoted atomically. Crash-safe the same way
-    * ingest and folds are: an interrupted migration leaves either the
-    * old marker (re-run migrates again — idempotent; already-current
-    * state is a no-op) or an unpromoted staging generation (invisible,
-    * GC'd by the next fold).
-    *
-    * Contract (spec-pinned in MigrationSpec): migrated `bands` rows
-    * are VALUE-EQUAL to what a current-version ingest of the same
-    * gated docs writes (one shared copy of the signature arithmetic —
-    * sigOf/bandedOf), so the state resumes exactly as a
-    * current-version state with the same tables would. One honest
-    * nuance on `edges`: pairs DISCOVERED under the old scheme are
-    * retained (they are exact-jaccard-VERIFIED true near-dups — valid
-    * facts under any scheme), and since the two schemes are
-    * independent equal-recall hash families, a v1-found borderline
-    * pair might not have been re-found by a v2-from-scratch run (and
-    * vice versa). Migrated state is therefore equivalent-or-better in
-    * dedup recall vs re-ingesting from scratch, not bit-identical to
-    * it; the MigrationSpec hash-equality holds because its three
-    * state dirs share identically-generated edges and differ only in
-    * the bands scheme — the seam under test. */
-  def migrateSigState(spark: SparkSession, stateDir: String,
-                      cfg: Curation.Config = Curation.Config()): Unit = {
-    val hc = spark.sparkContext.hadoopConfiguration
-    val marker = new org.apache.hadoop.fs.Path(s"$stateDir/$SigVersionFile")
-    val fs = marker.getFileSystem(hc)
-    readMarker(fs, marker) match {
-      case Some(SigVersion) => return // already current: idempotent no-op
-      case Some(v) =>
-        require(v < SigVersion,
-          s"state at $stateDir carries scheme v$v, NEWER than this build's " +
-            s"v$SigVersion — migration only goes forward; use the library " +
-            "version that wrote it")
-      case None => // pre-marker (scheme 1) state: migrate and stamp
-    }
-    def rebuiltBands(gated: DataFrame): DataFrame = {
-      // banded rows are per-doc: one pass rebuilds every epoch at once,
-      // each row re-attached to its doc's epoch (doc_ids are unique
-      // across the accumulated state — replays overwrite their epoch)
-      val epochs = gated.select(col("doc_id").as("__mid"), col(Epoch))
-      bandedOf(sigOf(gated.drop(Epoch), cfg), cfg)
-        .join(epochs, col("id") === col("__mid")).drop("__mid")
-    }
-    // live epochs: dynamic overwrite replaces exactly the rebuilt ones.
-    // repartition(__epoch) bounds the per-epoch file count the same way
-    // writeEpoch's coalesce(4) does (each epoch's rows land in one
-    // task → one file per partition dir, not one per shuffle task) —
-    // accBefore's per-micro-batch listings must stay cheap after a
-    // migration, exactly as after an ingest
-    rawTable(spark, s"$stateDir/gated").foreach { g =>
-      rebuiltBands(g).repartition(col(Epoch))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(Epoch)
-        .parquet(s"$stateDir/bands")
-    }
-    // compacted generation: new generation via the fold machinery
-    IndexGen.live(spark, s"$stateDir/$CompactedRoot").foreach { gen =>
-      val root = s"$stateDir/$CompactedRoot"
-      val newGen = IndexGen.begin(spark, root)
-      StateTables.foreach { case (t, keys) =>
-        val df =
-          if (t == "bands") {
-            val gp = new org.apache.hadoop.fs.Path(s"$gen/gated")
-            if (fs.exists(gp))
-              Some(rebuiltBands(spark.read.parquet(gp.toString)))
-            else None
-          } else {
-            val tp = new org.apache.hadoop.fs.Path(s"$gen/$t")
-            if (fs.exists(tp)) Some(spark.read.parquet(tp.toString)) else None
-          }
-        // same empty-table rule as compactState: zero-row tables stay
-        // absent (a footer-less dir bricks the read)
-        df.filter(!_.isEmpty).foreach { d =>
-          d.repartition(keys.map(col): _*)
-            .sortWithinPartitions(keys.map(col): _*)
-            .write.mode("overwrite").parquet(s"$newGen/$t")
-        }
-      }
-      // the fold bound is part of the payload — carry it over before
-      // promote, exactly as compactState does
-      val wm = new org.apache.hadoop.fs.Path(s"$gen/$WatermarkFile")
-      if (fs.exists(wm)) {
-        val in = fs.open(wm)
-        val bytes = try in.readAllBytes() finally in.close()
-        val out = fs.create(
-          new org.apache.hadoop.fs.Path(s"$newGen/$WatermarkFile"), true)
-        try out.write(bytes) finally out.close()
-      }
-      IndexGen.promote(spark, root, newGen)
-    }
-    // stamp LAST: a crash anywhere above leaves the old marker and a
-    // re-runnable migration
-    stampMarker(fs, marker)
-  }
-
   /** Per-doc minhash signature agg over one gated set:
     * (id, n, h0..h{perms-1}). Signatures + set sizes in ONE keyed agg:
     * per-occurrence hashing (the md5 formula of
@@ -543,18 +426,12 @@ object CurationStream {
     * vocabulary-distinct + join-back shape at MICRO-BATCH granularity —
     * a batch's occurrence list is near its vocabulary size, so the
     * corpus-scale vocab reuse would cost two extra exchanges per epoch
-    * for nothing; `n` rides the same agg. Shared by [[ingestEpoch]]
-    * and [[migrateSigState]] — ONE copy of the signature arithmetic is
-    * what makes "migrated state == freshly-ingested state" hold by
-    * construction. */
+    * for nothing; `n` rides the same agg. */
   private def sigOf(gated: DataFrame, cfg: Curation.Config): DataFrame = {
     val s = Stage.reuse(Dedup.shingleSet(gated, "text", "doc_id", 3))
-    // r20 note: the vocab-distinct + join-back form (hash per DISTINCT
-    // shingle, Dedup.signaturesFrom's corpus shape) was A/B'd here and
-    // REJECTED on measurement — with the r19 graft_md5_prefix kernel
-    // the per-occurrence digests cost ~1-2 task-s/epoch, while the
-    // extra distinct+join exchanges added ~30 task-s/epoch (ProfCur
-    // warm rounds: 64/88/62 → 94/90/118). Per-occurrence stands.
+    // per-occurrence digests (graft_md5_prefix kernel) cost ~1-2
+    // task-s/epoch; the vocab-distinct + join-back form's extra
+    // exchanges measured ~30 task-s/epoch more
     s.groupBy("id").agg(
       count(lit(1)).as("n"),
       (0 until cfg.minhashPerms).map(i =>
@@ -649,15 +526,6 @@ object CurationStream {
     // from staged blocks instead of racing the first materialization
     writeEpoch(gated, s"$stateDir/gated", epochId)
 
-    // dev-only phase timer (GRAFT_CS_PROF=1; used by ProfCurStream —
-    // zero cost when unset)
-    val csProf = sys.env.contains("GRAFT_CS_PROF")
-    def mark(label: String, t0: Long): Long = {
-      if (csProf) System.err.println(
-        f"[cs-prof] epoch $epochId $label%-18s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      System.nanoTime()
-    }
-
     // ---- text lane: exact-dup + near-dup (minhash-LSH) edges ----
     def textLane(): Unit = {
       // exact-dup edges (equal fingerprint)
@@ -685,10 +553,8 @@ object CurationStream {
       // banded rows carry the set size `n` so the accumulated bands
       // table doubles as the sizes artifact (band 0 slice = (id, n)) —
       // one table, one write, no separate sizes lineage
-      var tT = System.nanoTime()
       val banded = Stage.reuse(bandedOf(sig, cfg))
       writeEpoch(banded, s"$stateDir/bands", epochId)
-      tT = mark("text:bands-write", tT)
       // ONE banded join of the batch against batch ∪ accumulated, both
       // sides under the minhashLsh first-matching-band rule (exactly-
       // once per pair, no distinct; both `before` slices have length =
@@ -717,12 +583,9 @@ object CurationStream {
       // the id set and the verify join.
       val candIds = cand.select(col("id_a").as("cid"))
         .unionByName(cand.select(col("id_b").as("cid"))).distinct()
-      // r20 A/B note: feeding the batch side of this verify from the
-      // STAGED shingle set (join sBatch ⋈ candIds) was tried and
-      // REJECTED — the 163k-row shuffle join cost far more than
-      // re-deriving the candidate docs' shingles map-side with the
-      // graft kernels (ProfCur warm epochs: edges phase 2.8 → 5.5-6.6 s,
-      // text-lane task-s 534 → 891). Re-derivation from text stands.
+      // feeding the batch side from the STAGED shingle set instead
+      // (join sBatch ⋈ candIds) measured slower: the shuffle join costs
+      // more than re-deriving the candidates' shingles map-side
       val textAll = accGated
         .fold(gated.select(col("doc_id"), col("text")))(acc =>
           gated.select(col("doc_id"), col("text"))
@@ -733,7 +596,7 @@ object CurationStream {
         "text", "doc_id", 3)
       // own-batch sizes from the checkpointed banded rows (band-0
       // slice = (id, n) — the same artifact the accumulated side
-      // already uses) instead of re-running the signature agg (r20)
+      // already uses) instead of re-running the signature agg
       val sizes = banded.filter(col("band") === 0).select("id", "n")
       val sizesAll = accBands.map(_.filter(col("band") === 0).select("id", "n"))
         .fold(sizes)(a => sizes.unionByName(a))
@@ -743,7 +606,6 @@ object CurationStream {
         .select("id_a", "id_b")
       writeEpoch(withinExact.unionByName(crossExact).unionByName(lshEdges),
         s"$stateDir/edges", epochId)
-      tT = mark("text:edges-write", tT)
     }
 
     // ---- media lanes (the MultiModalCurationExample settings) ----
@@ -764,9 +626,8 @@ object CurationStream {
     }
     // the three lanes touch DISJOINT state tables and consume only the
     // already-materialized gated blocks / prior-epoch state, so they
-    // run concurrently (see inParallel — the r20 jobs-per-epoch
-    // optimization). Within a lane, order is unchanged; written rows
-    // are byte-identical to the serial form. One caveat, documented:
+    // run concurrently (see inParallel). Within a lane, order is
+    // unchanged; written rows are byte-identical to the serial form. One caveat, documented:
     // Dedup.shared's AQE-off planning window is per-session conf, so a
     // query PLANNED in another lane during that window compiles its
     // tiny exchanges without AQE coalescing — a bounded per-epoch
@@ -778,15 +639,14 @@ object CurationStream {
     autoFold(spark, stateDir, epochId, foldEvery, foldLag)
   }
 
-  /** WIRED auto-fold policy (r15 verdict #3 — cadence as policy, not
-    * caller discipline): fold the state every `foldEvery` epochs, i.e.
+  /** WIRED auto-fold policy (cadence as policy, not caller
+    * discipline): fold the state every `foldEvery` epochs, i.e.
     * at the end of each epoch with `(epochId + 1) % foldEvery == 0`,
     * with `uptoEpoch = epochId + 1 − foldLag`. [[ingestEpoch]] invokes
     * this when its `foldEvery` knob is > 0, so a production
     * `foreachBatch` driver gets bounded state layout by CONFIGURATION —
-    * no manual [[compactState]] calls to remember (the gate, the fuzz
-    * schedules and [[graft.examples.ProfileCurationStream]] all run
-    * through this path).
+    * no manual [[compactState]] calls to remember (the gate and the
+    * fuzz schedules run through this path).
     *
     * Crash window: the fold runs inside `foreachBatch`, after the
     * epoch's own writes committed but BEFORE the streaming checkpoint

@@ -43,9 +43,8 @@ import org.apache.spark.sql.SparkSession
   * old generations linger until the next promote. Every state is
   * re-runnable.
   *
-  * LEGACY layout: an `indexDir` with payload at top level (no
-  * `MANIFEST`, no committed generation) resolves to itself, so indexes
-  * written before this scheme keep loading unchanged.
+  * A generation is the only layout read: an `indexDir` with payload at
+  * top level and no committed generation resolves to nothing.
   */
 object IndexGen {
 
@@ -188,9 +187,8 @@ object IndexGen {
 
   /** Resolve the live generation's payload root: the manifest's
     * generation, falling back to `MANIFEST.prev` (mid-promote crash
-    * window), then to the newest COMMITTED generation (double-crash),
-    * then to the legacy flat layout (indexDir itself, when it exists
-    * with non-generation content). None = nothing readable here. */
+    * window), then to the newest COMMITTED generation (double-crash).
+    * None = no committed generation here. */
   def live(spark: SparkSession, indexDir: String): Option[String] = {
     val (f, root) = fs(spark, indexDir)
     def resolve(name: String): Option[String] = {
@@ -205,18 +203,12 @@ object IndexGen {
         // the same scheme/prefix as the manifest-resolved branch
         // (listStatus qualifies paths with file:/ etc.)
         .map { case (_, p) => new Path(root, p.getName).toString })
-      .orElse {
-        if (f.exists(root) && f.listStatus(root).exists { s =>
-            val n = s.getPath.getName
-            !n.startsWith(GenPrefix) && !n.startsWith(Manifest) })
-          Some(indexDir)
-        else None
-      }
   }
 
   /** [[live]] for writers/readers that require an index to exist. */
   def liveRequired(spark: SparkSession, indexDir: String): String =
     live(spark, indexDir).getOrElse(
       throw new IllegalStateException(
-        s"$indexDir has no committed generation and no legacy payload"))
+        s"$indexDir has no committed generation; a flat pre-generation " +
+          "layout is not read — rebuild the index from its source"))
 }

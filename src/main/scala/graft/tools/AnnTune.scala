@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 import graft.core.Tables
@@ -9,10 +8,7 @@ import graft.core.Tables
 object AnnTune {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.SessionSetup.session(8)
     val e = Tables(spark, sfDir).embeddings
     val q = e.filter(col("vec_id") < 10)
     val qq = q.select(col("vec_id").as("query_id"),

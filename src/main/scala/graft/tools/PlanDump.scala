@@ -1,12 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev harness (r19 optimization round): dump `.explain("formatted")`
-  * for every named query (or all of them) into a directory, one file
-  * per query, under the SAME session config as Bench — shuffle
-  * partitions, AQE, UTC — so the captured plan is the one the bench
-  * actually times. Usage:
+/** Dev harness: dump `.explain("formatted")` for every named query (or
+  * all of them) into a directory, one file per query, under Bench's
+  * session ([[graft.core.SessionSetup]]) so the captured plan is the
+  * one the bench actually times. Usage:
   *   runMain graft.tools.PlanDump <sfDir> <outDir> [suffix] [q1,q2,...]
   * writes <outDir>/<query>_<suffix>.txt (suffix defaults to "before").
   */
@@ -22,18 +19,7 @@ object PlanDump {
       val unknown = names -- graft.SparkEntry.queries.keySet
       require(unknown.isEmpty, s"unknown queries: $unknown")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.maxResultSize", "4g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.core.LogHygiene.install()
+    val spark = graft.core.SessionSetup.session(32)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val names = graft.SparkEntry.queries.keySet.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))

@@ -165,6 +165,16 @@ class BloomDedupSpec extends SparkSpec {
     assert(e.getMessage.contains("pre-r17") && e.getMessage.contains("rebuild"))
   }
 
+  test("a pre-r17 md5-string gram table is refused by incrementalSpans, not read as all-novel") {
+    val b = Seq((10L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
+    // the old on-disk shape: full md5 hex strings in `h`
+    val oldGrams = Seq("0123456789abcdef0123456789abcdef").toDF("h")
+    val e = intercept[IllegalArgumentException] {
+      graft.operators.BloomDedup.incrementalSpans(b, oldGrams)
+    }
+    assert(e.getMessage.contains("pre-r17") && e.getMessage.contains("rebuild"))
+  }
+
   test("bucketed index: same result, corpus band side joins WITHOUT an exchange") {
     import graft.examples.DailyCrawlExample
     import graft.operators.BloomDedup._

@@ -46,6 +46,18 @@ class CurationStreamSpec extends SparkSpec {
       "fixture must exercise the funnel (gates/dedup/media lanes)")
   }
 
+  test("inParallel waits for every lane, then rethrows the first failure unwrapped") {
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val boom = new IllegalStateException("lane failed")
+    val e = intercept[IllegalStateException] {
+      CurationStream.inParallel(Seq(
+        "fails" -> (() => throw boom),
+        "slow" -> (() => { Thread.sleep(200); siblingDone.set(true) })))(spark)
+    }
+    assert(e eq boom, s"expected the lane's own exception, got $e")
+    assert(siblingDone.get(), "the failure surfaced while a sibling lane was still running")
+  }
+
   test("signature-scheme marker: fresh state is stamped; pre-marker and mismatched state are refused") {
     val part = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 6))
     // fresh dir: first ingest stamps the marker, a second ingest accepts it

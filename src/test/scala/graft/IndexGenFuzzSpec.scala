@@ -96,7 +96,7 @@ class IndexGenFuzzSpec extends SparkSpec {
           assert(lastCompleted.isEmpty,
             s"seed=$seed: index stopped resolving after a completed promote")
         case Some(gen) =>
-          assert(gen != root, s"seed=$seed: resolved the legacy root of a generational index")
+          assert(gen != root, s"seed=$seed: resolved the index root instead of a generation")
           val (a, b) = (readFile(s"$gen/corpus/part-0"), readFile(s"$gen/meta"))
           assert(a == b, s"seed=$seed: TORN generation published: corpus=$a meta=$b")
           assert(payloadComplete.contains(a),

@@ -21,7 +21,7 @@ class IndexGenSpec extends SparkSpec {
     assert(IndexGen.live(spark, s"$dir/idx").isEmpty, "empty dir resolves to nothing")
     val g1 = IndexGen.begin(spark, s"$dir/idx")
     Seq(1).toDF("x").write.parquet(s"$g1/t")
-    // unpromoted staging is invisible (no committed gen, no legacy payload)
+    // unpromoted staging is invisible (no committed generation)
     assert(IndexGen.live(spark, s"$dir/idx").isEmpty)
     IndexGen.promote(spark, s"$dir/idx", g1)
     assert(IndexGen.live(spark, s"$dir/idx").contains(g1))
@@ -126,10 +126,12 @@ class IndexGenSpec extends SparkSpec {
     assert(err.getMessage.contains("garbage-collected"))
   }
 
-  test("legacy flat layout resolves to the dir itself") {
-    val dir = tmp("legacy")
+  test("a flat layout with no committed generation is refused, not read") {
+    val dir = tmp("flat")
     Seq((1L, "a")).toDF("id", "t").write.parquet(s"$dir/idx/fp")
-    assert(IndexGen.live(spark, s"$dir/idx").contains(s"$dir/idx"))
+    assert(IndexGen.live(spark, s"$dir/idx").isEmpty)
+    val e = intercept[IllegalStateException](IndexGen.liveRequired(spark, s"$dir/idx"))
+    assert(e.getMessage.contains("rebuild"))
   }
 
   test("ANN model loaded at gen N answers identically while a concurrent compact publishes N+1") {

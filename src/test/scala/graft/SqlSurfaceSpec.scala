@@ -51,5 +51,9 @@ class SqlSurfaceSpec extends SparkSpec {
     val qs = SparkEntry.queries.keySet
     val dangling = SparkEntry.oracleSql.keySet.diff(qs)
     assert(dangling.isEmpty, s"oracles without queries: $dangling")
+    // Bench's `qn` array quotes gate names without JSON escaping, which
+    // is safe only while every name is a plain identifier
+    val unsafe = (qs ++ SparkEntry.oracleSql.keySet).filterNot(_.matches("[a-z0-9_]+"))
+    assert(unsafe.isEmpty, s"gate names outside [a-z0-9_]+: $unsafe")
   }
 }
